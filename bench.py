@@ -90,7 +90,7 @@ def time_extraction(cpus: int, corpus_path: str) -> tuple[float, int]:
 
     The corpus is CORPUS_FILES parquet files -> CORPUS_FILES input splits, so
     the UDF runs directly on scan partitions (no shuffle in the timed path;
-    the salted-repartition plan is exercised by the pipeline tests — here we
+    the url-repartition plan is exercised by the pipeline tests — here we
     measure parser throughput scaling, which is what the north rule's
     N-vs-4N criterion is about)."""
     from pyspark.sql import functions as F

@@ -177,6 +177,17 @@ _TAG_CACHE_MAX = 4096
 _TAG_CACHE_MAX_KEY_LEN = 32
 
 
+def _tag_miss(raw: str, cache: dict[str, tuple[str, int]]) -> tuple[str, int]:
+    """(lowered tag, flag bits) for a spelling not in ``cache``; memoizes it
+    when the cache is under both bounds. Called only on a memo miss, so
+    the hit path in ``_assemble_blocks`` stays one dict get."""
+    low = raw.lower()
+    hit = (low, _TAG_FLAGS.get(low, 0))
+    if len(cache) < _TAG_CACHE_MAX and len(raw) <= _TAG_CACHE_MAX_KEY_LEN:
+        cache[raw] = hit
+    return hit
+
+
 def tokenize(source: str) -> list[tuple[str, str, str, int, int]]:
     """Lex ``source`` into a list of (kind, tag, text, start, end) events.
 
@@ -299,7 +310,6 @@ def _assemble_blocks(source: str) -> list[_Block]:
             cur.path_flags = False
 
     _block_tags = _BLOCK_TAGS
-    _fget = _TAG_FLAGS.get
     _cache = _TAG_CACHE
     _cget = _cache.get
     _unescape = _htmllib.unescape
@@ -356,10 +366,7 @@ def _assemble_blocks(source: str) -> list[_Block]:
             # ---- close tag ----
             hit = _cget(raw)
             if hit is None:
-                low = raw.lower()
-                hit = (low, _fget(low, 0))
-                if len(_cache) < _TAG_CACHE_MAX and len(raw) <= _TAG_CACHE_MAX_KEY_LEN:
-                    _cache[raw] = hit
+                hit = _tag_miss(raw, _cache)
             tag, fl = hit
             if fl & 1 and cur.parts:  # block tag
                 flush()
@@ -391,10 +398,7 @@ def _assemble_blocks(source: str) -> list[_Block]:
         # ---- open tag ----
         hit = _cget(raw)
         if hit is None:
-            low = raw.lower()
-            hit = (low, _fget(low, 0))
-            if len(_cache) < _TAG_CACHE_MAX and len(raw) <= _TAG_CACHE_MAX_KEY_LEN:
-                _cache[raw] = hit
+            hit = _tag_miss(raw, _cache)
         tag, fl = hit
         if fl & 4:  # raw-text element
             # The tokenizer emits open+close around the skipped body; no

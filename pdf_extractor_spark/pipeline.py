@@ -5,14 +5,18 @@ One declarative DataFrame program replaces the reference's stages 2-10
 
     scan (url, html pruned-read)
       -> resume anti-join vs committed snapshots        [S3]
-      -> salted repartition (url bucket + heavy-host salt)
+      -> url hash repartition (when n_partitions is set)
       -> vectorized extract UDF (the one Python stage)  [M1/M6]
       -> project result struct to columns
-      -> snapshot commit + per-partition lineage append
+      -> snapshot commit + per-partition lineage
 
-Physical shape: one explicit Exchange, one ArrowEvalPython, everything else
-whole-stage codegen. Per-doc failures are ``ok=false`` rows, never task
-failures (reference main.py:852-854 continue-on-error).
+Every entry point (the batch job, refresh, the repair loop and the
+streaming micro-batch) extracts through ``_extract_sized`` and commits
+through ``_commit_with_lineage``, so every data snapshot has its lineage.
+
+Physical shape: at most one explicit Exchange, one ArrowEvalPython,
+everything else whole-stage codegen. Per-doc failures are ``ok=false``
+rows, never task failures (reference main.py:852-854 continue-on-error).
 """
 
 from __future__ import annotations
@@ -31,19 +35,18 @@ RESULT_COLUMNS = ["url", "warc_ts", "lang", "text", "spans", "n_blocks", "kind",
 def extract_documents(
     df: DataFrame,
     n_partitions: int | None = None,
-    heavy: list[str] | None = None,
     context: ExtractContext | None = None,
 ) -> DataFrame:
     """Pure transformation: (url, warc_ts, html, lang, ...) -> extraction results.
 
-    ``n_partitions=None`` skips the explicit repartition (small inputs /
-    already-bucketed tables); pass it on big scans so the UDF stage is
-    salted against host skew. ``context`` (M4) is a per-run option set
-    closed over by the UDF — one serialized object per task, applied to
-    every document (reference src/extractor.py:161-183).
+    ``n_partitions=None`` runs the UDF on the input's own partitions (scan
+    splits / already-bucketed tables); otherwise the input is first
+    hash-repartitioned by url into ``n_partitions``. ``context`` (M4) is a
+    per-run option set closed over by the UDF — one serialized object per
+    task, applied to every document (reference src/extractor.py:161-183).
     """
     if n_partitions:
-        df = salted_repartition(df, n_partitions, heavy=heavy)
+        df = salted_repartition(df, n_partitions)
     udf = extract_udf if context is None else make_extract_udf(context)
     extracted = df.withColumn("_x", udf(F.col("html")))
     keep = [c for c in ["url", "warc_ts", "lang", "html"] if c in df.columns]
@@ -73,30 +76,33 @@ def run_extraction_job(
     exactly the unprocessed urls (catalog.remaining anti-join).
     """
     todo = catalog.remaining(spark, input_df, output_table) if resume else input_df
-    extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
-    # keep html out of the committed output (it's the 100-TB column); lineage
-    # needs its length, so compute sizes before dropping.
-    sized = extracted.withColumn("bytes_in", F.length("html")).drop("html")
-    sized = sized.persist()
+    sized = _extract_sized(todo, n_partitions, context)
     try:
         return _commit_with_lineage(sized, output_table)
     finally:
         sized.unpersist()
 
 
+def _extract_sized(
+    todo: DataFrame, n_partitions: int | None, context: ExtractContext | None
+) -> DataFrame:
+    """Extract ``todo`` into a persisted, commit-ready frame: ``bytes_in``
+    holds the payload length and ``html`` (the 100-TB column) is dropped.
+    Persisted so the commit, its lineage and any caller counts share one
+    UDF pass; the caller unpersists."""
+    extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
+    return extracted.withColumn("bytes_in", F.length("html")).drop("html").persist()
+
+
 def _commit_with_lineage(sized: DataFrame, output_table: str) -> dict:
-    """Commit an extraction-result frame (html already dropped, bytes_in
-    precomputed) as one snapshot plus its per-partition lineage rows.
-    ``sized`` must be persisted by the caller (it is counted, committed,
-    and aggregated). Empty input -> NO snapshot: a fully-resumed re-run
-    (or an empty time window in process_in_batches) must not append empty
-    snap_N + _lineage dirs on every invocation."""
+    """Commit a persisted ``_extract_sized`` frame (or a filter of one) as
+    one data snapshot plus its per-partition lineage rows. Empty input -> NO snapshot: a fully-resumed
+    re-run (or an empty time window / replayed micro-batch) must not
+    append empty snap_N + _lineage dirs on every invocation."""
     if sized.isEmpty():
         return {"snapshot": None, "rows": 0, "marker": None}
     snap_id = catalog.commit_snapshot(sized, output_table)
     marker = f"snap_{snap_id}"
-    # bytes_in is already a length here -> sum it directly (lineage_for's
-    # length() form is for DataFrames that still carry the binary column)
     lineage = (
         sized.withColumn("partition_id", F.spark_partition_id())
         .groupBy("partition_id")
@@ -187,10 +193,7 @@ def run_refresh_job(
             corpus_band_index = read_table(spark, idx_table)
 
     todo = catalog.remaining(spark, batch_df, output_table)
-    extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
-    sized = (
-        extracted.withColumn("bytes_in", F.length("html")).drop("html").persist()
-    )
+    sized = _extract_sized(todo, n_partitions, context)
     keep = sized
     try:
         batch_in = batch_df.count()
@@ -289,13 +292,17 @@ def rerun_failed(
         if failed.isEmpty():
             break
         todo = input_df.join(failed, on="url", how="left_semi")
-        extracted = extract_documents(todo, n_partitions=n_partitions, context=context)
-        sized = extracted.withColumn("bytes_in", F.length("html")).drop("html")
-        # last-wins: newer snapshot rows supersede older ones for the same
-        # url at read time via dedupe_latest
-        snap_id = catalog.commit_snapshot(sized, output_table)
-        n_fixed = sized.filter(F.col("ok")).count()
-        metrics.append({"snapshot": snap_id, "retried": sized.count(), "fixed": n_fixed})
+        sized = _extract_sized(todo, n_partitions, context)
+        try:
+            # last-wins: newer snapshot rows supersede older ones for the
+            # same url at read time via read_latest
+            committed = _commit_with_lineage(sized, output_table)
+            n_fixed = sized.filter(F.col("ok")).count()
+        finally:
+            sized.unpersist()
+        metrics.append(
+            {"snapshot": committed["snapshot"], "retried": committed["rows"], "fixed": n_fixed}
+        )
         if n_fixed == 0:
             break  # no progress; stop burning rounds
     return metrics

@@ -1,28 +1,21 @@
-"""Explicit partitioning policy for the extraction hot path (north rule).
+"""Partitioning of the extraction UDF stage.
 
-Why this exists: AQE fixes *shuffle-join* skew, but the expensive stage here
-is the Python UDF — if one Zipf-heavy host's giant pages all land in one
-partition, that partition becomes the straggler regardless of AQE. So:
+The expensive stage is the Python UDF, a per-row map. With unique urls, a
+hash repartition on ``url`` already spreads rows evenly over the
+partitions, whatever the host mix: skew in a per-row map comes from
+document size, not host. Salting a heavy host buys nothing on top, since
+any salt derived from the url is itself a function of the url. So the UDF
+stage pays for one plain url repartition and no pre-pass over the input.
 
-- every row gets a ``bucket = pmod(xxhash64(url), n_buckets)`` — the analog of
-  an Iceberg ``PARTITIONED BY (bucket(B, url))`` layout;
-- rows whose host is a detected heavy hitter additionally get a salt, so one
-  host spreads over ``n_salts`` partitions (SURVEY.md §4.2).
-
-Heavy hitters are detected with a single cheap count-aggregation over the
-(pruned, html-free) scan — at 100 TB this reads only the url column.
+``heavy_hosts`` remains as a diagnostic (which hosts dominate a crawl); no
+job path calls it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-DEFAULT_SALTS = 16
 HEAVY_HOST_FRACTION = 0.02  # a host with >2% of all rows is "heavy"
-
-
-def with_host(df: DataFrame, url_col: str = "url") -> DataFrame:
-    return df.withColumn("host", F.parse_url(F.col(url_col), F.lit("HOST")))
 
 
 def heavy_hosts(df: DataFrame, url_col: str = "url", fraction: float = HEAVY_HOST_FRACTION) -> list[str]:
@@ -31,7 +24,7 @@ def heavy_hosts(df: DataFrame, url_col: str = "url", fraction: float = HEAVY_HOS
     if total == 0:
         return []
     rows = (
-        with_host(df.select(url_col), url_col)
+        df.select(F.parse_url(F.col(url_col), F.lit("HOST")).alias("host"))
         .groupBy("host")
         .count()
         .filter(F.col("count") > fraction * total)
@@ -46,29 +39,18 @@ def salted_repartition(
     n_partitions: int,
     url_col: str = "url",
     heavy: list[str] | None = None,
-    n_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
-    """Repartition by (url-bucket, salt-for-heavy-hosts) for the UDF stage.
+    """Hash-repartition ``df`` by url into ``n_partitions`` for the UDF stage.
 
-    Light hosts hash by url alone (stable bucketing); heavy hosts get an
-    extra xxhash64-derived salt so no single host serializes one partition.
+    The name and the unused ``heavy`` argument are kept for the benchmark's
+    ledger and traced spans (perfbench), which bind to them; no salt is
+    applied.
     """
-    if heavy is None:
-        heavy = heavy_hosts(df, url_col)
-    hosted = with_host(df, url_col)
-    salted = hosted.withColumn(
-        "_salt",
-        F.when(
-            F.col("host").isin(heavy) if heavy else F.lit(False),
-            F.pmod(F.xxhash64(F.col(url_col), F.lit(1)), F.lit(n_salts)),
-        ).otherwise(F.lit(0)),
-    )
-    # repartition on the RAW columns: repartition() murmur3-hashes its
+    # repartition on the RAW column: repartition() murmur3-hashes its
     # expressions, so pre-bucketing with pmod(xxhash64(url), n) double-
     # hashes — only ~n*(1-1/e) of n partitions get data and multi-bucket
     # collisions build 4x stragglers (measured: 19/32 non-empty,
-    # max/min 4.5x, vs 32/32 and near-uniform on the raw columns). The
+    # max/min 4.5x, vs 32/32 and near-uniform on the raw column). The
     # explicit on-disk analog (Iceberg bucket(B, url)) lives in the
     # storage layout, not in this exchange.
-    out = salted.repartition(n_partitions, F.col(url_col), F.col("_salt"))
-    return out.drop("_salt", "host")
+    return df.repartition(n_partitions, F.col(url_col))

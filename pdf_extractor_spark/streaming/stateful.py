@@ -16,9 +16,10 @@ equivalence is asserted in tests/test_streaming_stateful.py across
 micro-batch boundaries (state survives via the checkpoint).
 
 Scale notes: state is one small tuple per key (not per event) — memory is
-O(active keys); the shuffle key is the session key, so skewed hosts get the
-same salting treatment as the batch path before entering the operator; the
-RocksDB state store backend handles key counts beyond executor memory.
+O(active keys); the shuffle key is the session key, which cannot be salted
+(a session must see every event of its key), so a hot key costs shuffle
+bandwidth only; the RocksDB state store backend handles key counts beyond
+executor memory.
 """
 
 from __future__ import annotations

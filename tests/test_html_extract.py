@@ -272,23 +272,29 @@ _ADVERSARIAL = [
 ]
 
 
-def test_tag_memo_case_insensitive_and_capped():
-    """The raw-spelling memo caches (lowered, flags) per spelling and stops
-    growing at its cap; behavior must be identical either side of the cap."""
+def test_tag_memo_case_insensitive_and_capped(monkeypatch):
+    """The raw-spelling memo caches (lowered, flags) per spelling, never
+    pins long spellings, and stops growing at its entry cap; behavior must
+    be identical either side of the cap. Runs against a fresh memo, so the
+    module's own memo is untouched and each bound is tested on its own."""
     from pdf_extractor_spark.extract import html_parser as hp
 
+    memo: dict = {}
+    monkeypatch.setattr(hp, "_TAG_CACHE", memo)
     page = "<DIV><P>Case crossing paragraph long enough to be real content.</p></div>"
     before = hp._assemble_blocks(page)
-    # flood the memo past its cap with unique tag spellings
+    assert memo["DIV"] == memo["div"] and memo["DIV"][0] == "div"
+    # long tag spellings are refused by the key-length bound alone: the
+    # memo is far below its entry cap here
+    n_cached = len(memo)
+    assert n_cached < hp._TAG_CACHE_MAX
+    hp._assemble_blocks("".join(f"<y{'A' * 500}{i}>t</y{'A' * 500}{i}>" for i in range(50)))
+    assert len(memo) == n_cached
+    # flood the memo past its entry cap with unique short spellings
     junk = "".join(f"<x{i}>t</x{i}>" for i in range(hp._TAG_CACHE_MAX + 64))
     hp._assemble_blocks(junk)
-    assert len(hp._TAG_CACHE) <= hp._TAG_CACHE_MAX
-    # long tag spellings must never be pinned in the memo (byte bound, not
-    # just entry-count bound)
-    n_cached = len(hp._TAG_CACHE)
-    hp._assemble_blocks("".join(f"<y{'A' * 500}{i}>t</y{'A' * 500}{i}>" for i in range(50)))
-    assert len(hp._TAG_CACHE) == n_cached
-    assert all(len(k) <= hp._TAG_CACHE_MAX_KEY_LEN for k in hp._TAG_CACHE)
+    assert len(memo) == hp._TAG_CACHE_MAX
+    assert all(len(k) <= hp._TAG_CACHE_MAX_KEY_LEN for k in memo)
     after = hp._assemble_blocks(page)
     key = lambda b: (b.text, b.start, b.end, b.tag, b.path_flags, b.anchor_chars)
     assert [key(b) for b in before] == [key(b) for b in after]

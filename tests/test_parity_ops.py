@@ -131,6 +131,22 @@ def test_rerun_failed_repairs(spark, tmp_path, monkeypatch):
     assert latest.count() == 2
     assert latest.filter(~F.col("ok")).count() == 0
 
+    # the repair snapshot carries lineage like any other commit: doc_count
+    # sums per snapshot equal the rows that snapshot committed
+    lineage = catalog.read_committed(spark, os.path.join(table, "_lineage"))
+    docs = {
+        r["checkpoint_marker"]: r["docs"]
+        for r in lineage.groupBy("checkpoint_marker")
+        .agg(F.sum("doc_count").alias("docs"))
+        .collect()
+    }
+    committed = {
+        f"snap_{r['_snapshot']}": r["count"]
+        for r in catalog.read_committed(spark, table).groupBy("_snapshot").count().collect()
+    }
+    assert f"snap_{metrics[0]['snapshot']}" in docs
+    assert docs == committed
+
 
 def test_render_statement_roundtrip(spark):
     from pdf_extractor_spark.plans.reconstruct import (

@@ -54,23 +54,22 @@ def _input_df(spark, corpus, n_partitions):
 
 @pytest.mark.parametrize("n_partitions", [1, 4, 13])
 def test_byte_identical_vs_golden_at_any_partitioning(spark, corpus, goldens, n_partitions):
+    """Golden at every partitioning: the input's own splits and the UDF
+    stage's url repartition (``extract_documents(n_partitions=)``)."""
     df = _input_df(spark, corpus, n_partitions)
-    result = extract_documents(df).select("url", "text", "n_blocks", "kind", "ok").collect()
-    assert len(result) == N_DOCS
-    for row in result:
-        g_text, g_blocks, g_kind, g_ok = goldens[row["url"]]
-        assert row["text"] == g_text, f"text mismatch for {row['url']}"
-        assert row["n_blocks"] == g_blocks
-        assert row["kind"] == g_kind
-        assert row["ok"] == g_ok
-
-
-def test_salted_repartition_equivalent(spark, corpus, goldens):
-    df = _input_df(spark, corpus, 4)
-    result = extract_documents(df, n_partitions=8).select("url", "text").collect()
-    assert len(result) == N_DOCS
-    for row in result:
-        assert row["text"] == goldens[row["url"]][0]
+    for udf_partitions in (None, n_partitions):
+        result = (
+            extract_documents(df, n_partitions=udf_partitions)
+            .select("url", "text", "n_blocks", "kind", "ok")
+            .collect()
+        )
+        assert len(result) == N_DOCS
+        for row in result:
+            g_text, g_blocks, g_kind, g_ok = goldens[row["url"]]
+            assert row["text"] == g_text, f"text mismatch for {row['url']}"
+            assert row["n_blocks"] == g_blocks
+            assert row["kind"] == g_kind
+            assert row["ok"] == g_ok
 
 
 def test_error_rows_not_failures(spark):
@@ -113,6 +112,45 @@ def test_resumable_job_with_lineage(spark, corpus, goldens, tmp_path):
     assert by_marker[m1["marker"]] == n_first
     assert by_marker[m2["marker"]] == N_DOCS - n_first
     assert lineage.filter(F.col("bytes_in") <= 0).count() == 0
+
+
+def _jobs_per_group(spark, groups) -> dict:
+    """Spark jobs launched under each job group. The status listener lags
+    the actions' return, but it handles events in order: once a sentinel
+    job run after them is visible and finished, every earlier job is too."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup("sentinel", "sentinel")
+    spark.range(1).collect()
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 10.0
+    while True:
+        done = [st.getJobInfo(j) for j in st.getJobIdsForGroup("sentinel")]
+        if done and all(j is not None and j.status == "SUCCEEDED" for j in done):
+            return {g: len(st.getJobIdsForGroup(g)) for g in groups}
+        assert time.monotonic() < deadline, "status listener did not catch up"
+        time.sleep(0.05)
+
+
+def test_noop_resume_launches_no_extra_jobs_for_partitioning(spark, corpus, tmp_path):
+    """A no-op resume costs the same Spark jobs with or without the UDF-stage
+    repartition: partitioning adds an exchange to the plan, never a
+    pre-extraction action (such as a host-frequency pass) over the input."""
+    table = str(tmp_path / "t")
+    df = _input_df(spark, corpus[:40], 4)
+    assert run_extraction_job(spark, df, table)["rows"] == 40
+    sc = spark.sparkContext
+    groups = {4: "noop-resume-4", None: "noop-resume-none"}
+    try:
+        for n_partitions, group in groups.items():
+            sc.setJobGroup(group, group)
+            m = run_extraction_job(spark, df, table, n_partitions=n_partitions)
+            assert m["rows"] == 0
+        jobs = _jobs_per_group(spark, groups.values())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs["noop-resume-4"] == jobs["noop-resume-none"] > 0, jobs
 
 
 def test_uncommitted_snapshot_invisible(spark, corpus, tmp_path):

@@ -88,9 +88,8 @@ def test_no_hugeint_or_decimal_oracle_outputs():
     binds the CLAUDE.md rule: cast every numeric output to BIGINT.
 
     Pure-DuckDB test (no Spark): plan each oracle against sf0.001 views
-    and inspect the result types. The ONE deliberate exception is the
-    protocol canary's `hugeint_sum`, which exists precisely to
-    fingerprint how the driver hashes HUGEINT."""
+    and inspect the result types. No oracle is exempt, the protocol
+    canary included."""
     import duckdb
 
     from pdf_extractor_spark.queries import all_oracles
@@ -113,8 +112,6 @@ def test_no_hugeint_or_decimal_oracle_outputs():
             if str(ty) in ("HUGEINT", "UHUGEINT")
             or str(ty).startswith("DECIMAL")
         }
-        if name == "a_protocol_canary":
-            sus.pop("hugeint_sum", None)
         if sus:
             offenders[name] = sus
     assert not offenders, offenders

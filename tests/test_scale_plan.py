@@ -1,10 +1,10 @@
-"""Scale-posture tests: physical-plan hygiene + skew salting.
+"""Scale-posture tests: physical-plan hygiene + partition balance.
 
 These assert properties of the PLAN, not just results — at 100 TB the plan
 is the product: column pruning must keep the html binary column out of
 metadata-only scans, filters must reach the parquet reader, the hot path
-must contain exactly one Arrow Python stage, and salting must flatten
-Zipf-host compute skew.
+must contain exactly one Arrow Python stage, and the UDF stage's url
+repartition must flatten Zipf-host compute skew.
 """
 
 from __future__ import annotations
@@ -96,13 +96,15 @@ def test_salting_flattens_partition_skew(spark, doc_parquet):
     naive = df.repartition(n_parts, F.parse_url("url", F.lit("HOST")))
     naive_counts = partition_counts(naive)
 
-    salted = salted_repartition(df, n_parts, heavy=["host0.example"], n_salts=16)
-    salted_counts = partition_counts(salted)
+    # the UDF stage's plain url repartition (no salt): urls are unique, so
+    # the heavy host's rows spread like everyone else's
+    by_url = salted_repartition(df, n_parts)
+    url_counts = partition_counts(by_url)
 
     assert max(naive_counts) > 0.6 * 2000
-    assert max(salted_counts) < 0.25 * 2000
-    # salted spread is reasonably even: max within 3x mean
-    assert max(salted_counts) < 3 * statistics.mean(salted_counts)
+    assert max(url_counts) < 0.25 * 2000
+    # the spread is reasonably even: max within 3x mean
+    assert max(url_counts) < 3 * statistics.mean(url_counts)
 
 
 def test_star_join_broadcasts_dims(spark):
@@ -255,7 +257,7 @@ def test_pack_sequences_matches_single_window_form(spark):
 
 
 def test_salted_output_identical(spark, doc_parquet):
-    """Salting changes placement, never results."""
+    """The UDF-stage repartition changes placement, never results."""
     df = spark.read.parquet(doc_parquet)
     plain = {
         r["url"]: r["text"]
@@ -421,7 +423,8 @@ def test_skew_guards_end_to_end(spark, tmp_path):
     test: (a) an LSH bucket above max_bucket is dropped WITHOUT losing the
     capped docs' recall through their other bands; (b) a single host holding
     most of the corpus still yields bounded per-partition lineage doc-count
-    spread through the real extraction job (salting flattens the Zipf head)."""
+    spread through the real extraction job (the url repartition flattens
+    the Zipf head)."""
     import statistics
 
     from pdf_extractor_spark.operators.dedup import minhash_lsh_pairs
@@ -448,7 +451,7 @@ def test_skew_guards_end_to_end(spark, tmp_path):
     # ...but the capped docs still pair through their non-hot band
     assert (100, 101) in pairs
 
-    # --- (b) heavy-host salting bounds lineage spread -----------------------
+    # --- (b) the url repartition bounds lineage spread ----------------------
     n_docs, n_parts = 240, 16
     doc_rows = []
     for i in range(n_docs):
@@ -467,9 +470,9 @@ def test_skew_guards_end_to_end(spark, tmp_path):
     lineage = catalog.read_committed(spark, str(tmp_path / "skew_out" / "_lineage"))
     counts = [r["doc_count"] for r in lineage.collect()]
     assert sum(counts) == n_docs
-    # without salting the heavy host would serialize ~60% of rows onto one
-    # partition; with it no partition holds a host-sized share and the
-    # spread stays within 3x the mean
+    # keyed by host, the heavy host would serialize ~60% of rows onto one
+    # partition; keyed by url, no partition holds a host-sized share and
+    # the spread stays within 3x the mean
     assert max(counts) < 0.25 * n_docs
     assert max(counts) < 3 * statistics.mean(counts)
 

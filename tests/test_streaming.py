@@ -227,6 +227,21 @@ def test_stream_extract_exactly_once_per_url(spark, tmp_path):
     got = {r["url"]: r["text"] for r in done2.select("url", "text").collect()}
     assert got == goldens
 
+    # every micro-batch snapshot carries lineage: doc_count sums per
+    # snapshot equal the rows that snapshot committed
+    lineage = catalog.read_committed(spark, table + "/_lineage")
+    docs = {
+        r["checkpoint_marker"]: r["docs"]
+        for r in lineage.groupBy("checkpoint_marker")
+        .agg(F.sum("doc_count").alias("docs"))
+        .collect()
+    }
+    committed = {
+        f"snap_{r['_snapshot']}": r["count"]
+        for r in done2.groupBy("_snapshot").count().collect()
+    }
+    assert docs == committed and sum(docs.values()) == 40
+
 
 def test_stream_dedup_within_watermark_matches_batch(spark, tmp_path):
     """At-least-once re-deliveries (identical rows re-sent in a later
