@@ -21,23 +21,10 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("payload", StringType()),  # set by caller as binary
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
-    ]
 )
 
 FEATURE_DIM = 16

@@ -29,8 +29,6 @@ from pdf_extractor_spark.extract.udfs import ExtractContext, extract_udf, make_e
 from pdf_extractor_spark.plans.partitioning import salted_repartition
 from pdf_extractor_spark.sources import catalog
 
-RESULT_COLUMNS = ["url", "warc_ts", "lang", "text", "spans", "n_blocks", "kind", "ok", "error"]
-
 
 def extract_documents(
     df: DataFrame,

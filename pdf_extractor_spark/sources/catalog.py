@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -81,7 +82,6 @@ def next_snapshot_id(table_path: str) -> int:
 def commit_snapshot(
     df: DataFrame,
     table_path: str,
-    snapshot_id: int | None = None,
     *,
     preserve_snapshot: bool = False,
     replace_live: bool = False,
@@ -101,7 +101,7 @@ def commit_snapshot(
     (the delete/compact swap)."""
     os.makedirs(table_path, exist_ok=True)
     prior = _committed_ids(table_path)
-    n = next_snapshot_id(table_path) if snapshot_id is None else snapshot_id
+    n = next_snapshot_id(table_path)
     snap_dir = os.path.join(table_path, f"snap_{n}")
     if preserve_snapshot and "_snapshot" in df.columns:
         df = df.withColumn(
@@ -160,46 +160,47 @@ def list_snapshots(spark: SparkSession, table_path: str) -> DataFrame:
     )
 
 
-def delete_where(
-    spark: SparkSession, table_path: str, keys: DataFrame, key: str = "url"
+def _rewrite(
+    spark: SparkSession,
+    table_path: str,
+    keep: Callable[[DataFrame], DataFrame] = lambda df: df,
 ) -> int:
-    """S5 — delete rows by key (reference src/pdf_uploader.py:100-118
-    delete_file; Iceberg ``DELETE FROM`` analog): rewrite the table as one
-    consolidated snapshot minus the keys, commit it, then drop the old
-    snapshots' markers (old data dirs become invisible orphans, mirroring
-    Iceberg's snapshot expiry)."""
+    """Rewrite the table as ONE consolidated snapshot of ``keep(rows)``,
+    commit it, then drop the old snapshots' markers (old data dirs become
+    invisible orphans, mirroring Iceberg's snapshot expiry). Each row's
+    ``_snapshot`` is preserved (last-wins history) and the _live manifest
+    swaps in one rename; marker removal is mere housekeeping."""
     current = read_committed(spark, table_path)
     if current is None:
         return 0
     old_ids = _committed_ids(table_path)
-    kept = current.join(keys.select(key).distinct(), on=key, how="left_anti")
-    # preserve per-row _snapshot (last-wins history) and swap the _live
-    # manifest in one rename; marker removal below is mere housekeeping
     n = commit_snapshot(
-        kept, table_path, preserve_snapshot=True, replace_live=True
+        keep(current), table_path, preserve_snapshot=True, replace_live=True
     )
     for old in old_ids:
         marker = os.path.join(table_path, _MARKER.format(n=old))
         if os.path.exists(marker):
             os.remove(marker)
     return n
+
+
+def delete_where(
+    spark: SparkSession, table_path: str, keys: DataFrame, key: str = "url"
+) -> int:
+    """S5 — delete rows by key (reference src/pdf_uploader.py:100-118
+    delete_file; Iceberg ``DELETE FROM`` analog): rewrite the table minus
+    the keys."""
+
+    def keep(df: DataFrame) -> DataFrame:
+        return df.join(keys.select(key).distinct(), on=key, how="left_anti")
+
+    return _rewrite(spark, table_path, keep)
 
 
 def compact(spark: SparkSession, table_path: str) -> int:
     """Consolidate all committed snapshots into one (snapshot-expiry
     housekeeping; keeps the resume anti-join cheap as commits accumulate)."""
-    current = read_committed(spark, table_path)
-    if current is None:
-        return 0
-    old_ids = _committed_ids(table_path)
-    n = commit_snapshot(
-        current, table_path, preserve_snapshot=True, replace_live=True
-    )
-    for old in old_ids:
-        marker = os.path.join(table_path, _MARKER.format(n=old))
-        if os.path.exists(marker):
-            os.remove(marker)
-    return n
+    return _rewrite(spark, table_path)
 
 
 def remaining(

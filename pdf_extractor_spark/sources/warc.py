@@ -10,11 +10,14 @@ member boundaries without decompressing the whole file.
 
 This module is a from-scratch codec (writer + parser, pure functions — the
 writer exists so tests and fixtures can synthesize deterministic archives;
-no external data) plus the Spark reader:
-
-- ``read_warc``: ``binaryFile`` scan -> ``mapInPandas`` record splitter ->
-  the engine's (url, warc_ts, html, text, lang) input schema, ready for
-  ``pipeline.extract_documents``.
+no external data) for the three record kinds Common Crawl publishes, all
+in the same framing: WARC ``response`` (``build_warc`` / ``warc_rows``),
+WET ``conversion`` text (``build_wet`` / ``wet_rows``) and WAT JSON
+``metadata`` (``build_wat`` / ``wat_rows``). Two Spark readers, each a
+``binaryFile`` scan -> ``mapInPandas`` record splitter: ``read_warc`` gives
+the engine's (url, warc_ts, html, text, lang) input for
+``pipeline.extract_documents``; ``read_wet`` gives (url, warc_ts, text)
+rows for curation operators, with no extraction pass.
 
 Scale posture: one task per WARC file (Common Crawl files are ~1 GB, so a
 100 TB crawl is ~100k natural splits — parallelism comes free). Records
@@ -31,17 +34,72 @@ from __future__ import annotations
 
 import datetime
 import hashlib
+import itertools
+import json
 import zlib
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 CRLF = b"\r\n"
 _WARC_DATE_FMT = "%Y-%m-%dT%H:%M:%SZ"
+# WARC 1.1 allows fractional seconds; the 1.0 form is tried first
+_WARC_DATE_FMTS = (_WARC_DATE_FMT, "%Y-%m-%dT%H:%M:%S.%fZ")
 _GZIP_MAGIC = b"\x1f\x8b"
 
 
 # --- writer (deterministic; fixture/test archives) ---------------------------
+
+
+def _record(fields: list[tuple[str, str]], body: bytes) -> bytes:
+    """ISO 28500 framing: ``WARC/1.0``, the ``name: value`` fields in order,
+    ``Content-Length`` last, a blank line, the body, then CRLFCRLF."""
+    head = [b"WARC/1.0"] + [f"{k}: {v}".encode("ascii") for k, v in fields]
+    head.append(b"Content-Length: " + str(len(body)).encode("ascii"))
+    return CRLF.join(head) + CRLF + CRLF + body + CRLF + CRLF
+
+
+def _urn(key: str) -> str:
+    return f"<urn:md5:{hashlib.md5(key.encode()).hexdigest()}>"
+
+
+def _page_fields(
+    warc_type: str,
+    url: str,
+    date: datetime.datetime,
+    content_type: str,
+    derived: str | None = None,
+) -> list[tuple[str, str]]:
+    """Fields of a per-page record. Ids are md5-derived, never uuid4, so a
+    corpus always serializes to the same bytes: the response record's id is
+    md5(url|date); a record ``derived`` from it (``wet``, ``wat``) gets
+    md5(url|date|derived) plus a ``WARC-Refers-To`` naming the response."""
+    wdate = date.strftime(_WARC_DATE_FMT)
+    response_id = _urn(f"{url}|{wdate}")
+    ids = [("WARC-Record-ID", response_id)] if derived is None else [
+        ("WARC-Record-ID", _urn(f"{url}|{wdate}|{derived}")),
+        ("WARC-Refers-To", response_id),
+    ]
+    return [
+        ("WARC-Type", warc_type),
+        ("WARC-Target-URI", url),
+        ("WARC-Date", wdate),
+        *ids,
+        ("Content-Type", content_type),
+    ]
+
+
+def _archive(
+    raws: Iterable[bytes], gzip_members: bool, warcinfo_filename: str | None
+) -> bytes:
+    """Concatenate records, led by a warcinfo record when a filename is
+    given; with ``gzip_members`` each record is its own gzip member (Common
+    Crawl style)."""
+    if warcinfo_filename is not None:
+        raws = itertools.chain([build_warcinfo(warcinfo_filename)], raws)
+    if not gzip_members:
+        return b"".join(raws)
+    return b"".join(_gzip_member(r) for r in raws)
 
 
 def build_warc_response(
@@ -51,99 +109,23 @@ def build_warc_response(
     content_type: str = "text/html",
     http_status: str = "200 OK",
 ) -> bytes:
-    """One WARC ``response`` record: WARC headers + an HTTP/1.1 response.
-
-    The record id is md5-derived from (url, date) — deterministic, so the
-    same corpus always serializes to the same bytes (archives are
-    byte-comparable across runs and engines; no uuid4).
-    """
+    """One WARC ``response`` record: WARC headers + an HTTP/1.1 response."""
     http = (
-        f"HTTP/1.1 {http_status}{CRLF.decode()}"
-        f"Content-Type: {content_type}{CRLF.decode()}"
-        f"Content-Length: {len(payload)}{CRLF.decode()}{CRLF.decode()}"
+        f"HTTP/1.1 {http_status}\r\n"
+        f"Content-Type: {content_type}\r\n"
+        f"Content-Length: {len(payload)}\r\n\r\n"
     ).encode("ascii") + payload
-    rid = hashlib.md5(
-        f"{url}|{date.strftime(_WARC_DATE_FMT)}".encode()
-    ).hexdigest()
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: response",
-        b"WARC-Target-URI: " + url.encode("ascii"),
-        b"WARC-Date: " + date.strftime(_WARC_DATE_FMT).encode("ascii"),
-        b"WARC-Record-ID: <urn:md5:" + rid.encode("ascii") + b">",
-        b"Content-Type: application/http; msgtype=response",
-        b"Content-Length: " + str(len(http)).encode("ascii"),
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + http + CRLF + CRLF
+    ct = "application/http; msgtype=response"
+    return _record(_page_fields("response", url, date, ct), http)
 
 
-def build_wet_conversion(
-    url: str,
-    date: datetime.datetime,
-    text: bytes,
-) -> bytes:
+def build_wet_conversion(url: str, date: datetime.datetime, text: bytes) -> bytes:
     """One WET ``conversion`` record — the Common Crawl extracted-text
-    sibling of the response record (same ISO 28500 framing; WET files are
-    what CC publishes as *.warc.wet.gz). No HTTP envelope: the body IS the
-    extracted text, ``Content-Type: text/plain``, plus a
-    ``WARC-Refers-To`` pointing at the response record the text was
-    converted from (same (url, date) md5 id rule, so the two sides link
-    deterministically)."""
-    wdate = date.strftime(_WARC_DATE_FMT)
-    rid = hashlib.md5(f"{url}|{wdate}|wet".encode()).hexdigest()
-    refers = hashlib.md5(f"{url}|{wdate}".encode()).hexdigest()
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: conversion",
-        b"WARC-Target-URI: " + url.encode("ascii"),
-        b"WARC-Date: " + wdate.encode("ascii"),
-        b"WARC-Record-ID: <urn:md5:" + rid.encode("ascii") + b">",
-        b"WARC-Refers-To: <urn:md5:" + refers.encode("ascii") + b">",
-        b"Content-Type: text/plain",
-        b"Content-Length: " + str(len(text)).encode("ascii"),
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + text + CRLF + CRLF
-
-
-def build_wet(
-    records: Iterable[tuple[str, datetime.datetime, bytes]],
-    gzip_members: bool = True,
-    warcinfo_filename: str | None = None,
-) -> bytes:
-    """Serialize (url, date, text_bytes) tuples to a .warc.wet /
-    .warc.wet.gz byte string (one gzip member per record, Common Crawl
-    style)."""
-    raws: list[bytes] = []
-    if warcinfo_filename is not None:
-        raws.append(build_warcinfo(warcinfo_filename))
-    for url, date, text in records:
-        raws.append(build_wet_conversion(url, date, text))
-    if not gzip_members:
-        return b"".join(raws)
-    return b"".join(_gzip_member(r) for r in raws)
-
-
-def wet_rows(data: bytes) -> Iterator[dict]:
-    """(url, warc_ts, text) rows from WET archive bytes: ``conversion``
-    records only, body decoded utf-8 (replace — a conversion record is
-    text by contract, but one mojibake record must not kill the task)."""
-    for headers, body in iter_warc_records(data):
-        if headers.get("warc-type") != "conversion":
-            continue
-        url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        try:
-            ts = datetime.datetime.strptime(
-                headers.get("warc-date", ""), _WARC_DATE_FMT
-            )
-        except ValueError:
-            continue
-        yield {
-            "url": url,
-            "warc_ts": ts,
-            "text": body.decode("utf-8", "replace"),
-        }
+    sibling of the response record (WET files are what CC publishes as
+    *.warc.wet.gz). No HTTP envelope: the body IS the extracted text,
+    ``Content-Type: text/plain``, and ``WARC-Refers-To`` points at the
+    response record the text was converted from."""
+    return _record(_page_fields("conversion", url, date, "text/plain", "wet"), text)
 
 
 def build_wat_metadata(
@@ -154,17 +136,13 @@ def build_wat_metadata(
     http_status: int = 200,
 ) -> bytes:
     """One WAT ``metadata`` record — the Common Crawl per-page metadata
-    sibling (what CC publishes as *.warc.wat.gz): same ISO 28500 framing,
-    ``Content-Type: application/json``, body a JSON ``Envelope`` that
-    describes the response record it refers to (WARC header echo + payload
-    metadata: length, HTTP status, HTTP Content-Type). The JSON is emitted
-    compact with a FIXED field order so the same corpus always serializes
-    to the same bytes — the byte-level contract the oracle reconstructs.
-    Links to the response record via the same (url, date) md5 id rule as
-    WET."""
+    sibling (what CC publishes as *.warc.wat.gz): ``Content-Type:
+    application/json``, body a JSON ``Envelope`` that describes the
+    response record it refers to (WARC header echo + payload metadata:
+    length, HTTP status, HTTP Content-Type). The JSON is emitted compact
+    with a FIXED field order so the same corpus always serializes to the
+    same bytes — the byte-level contract the oracle reconstructs."""
     wdate = date.strftime(_WARC_DATE_FMT)
-    rid = hashlib.md5(f"{url}|{wdate}|wat".encode()).hexdigest()
-    refers = hashlib.md5(f"{url}|{wdate}".encode()).hexdigest()
     body = (
         '{"Envelope":{"WARC-Header-Metadata":{'
         f'"WARC-Type":"response","WARC-Target-URI":"{url}",'
@@ -177,89 +155,20 @@ def build_wat_metadata(
         f'"Content-Type":"{content_type}"'
         "}}}}}"
     ).encode("ascii")
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: metadata",
-        b"WARC-Target-URI: " + url.encode("ascii"),
-        b"WARC-Date: " + wdate.encode("ascii"),
-        b"WARC-Record-ID: <urn:md5:" + rid.encode("ascii") + b">",
-        b"WARC-Refers-To: <urn:md5:" + refers.encode("ascii") + b">",
-        b"Content-Type: application/json",
-        b"Content-Length: " + str(len(body)).encode("ascii"),
-    ]
-    return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
-
-
-def build_wat(
-    records: Iterable[tuple[str, datetime.datetime, int]],
-    gzip_members: bool = True,
-    warcinfo_filename: str | None = None,
-) -> bytes:
-    """Serialize (url, date, payload_len) tuples to a .warc.wat /
-    .warc.wat.gz byte string (one gzip member per record, Common Crawl
-    style)."""
-    raws: list[bytes] = []
-    if warcinfo_filename is not None:
-        raws.append(build_warcinfo(warcinfo_filename))
-    for url, date, payload_len in records:
-        raws.append(build_wat_metadata(url, date, payload_len))
-    if not gzip_members:
-        return b"".join(raws)
-    return b"".join(_gzip_member(r) for r in raws)
-
-
-def wat_rows(data: bytes) -> Iterator[dict]:
-    """(url, warc_ts, payload_len, http_status, content_type) rows from WAT
-    archive bytes: ``metadata`` records only, body parsed as JSON with the
-    Envelope layout above. Malformed JSON bodies are skipped, never fatal
-    (same tolerance contract as the WARC/WET parsers)."""
-    import json as _json
-
-    for headers, body in iter_warc_records(data):
-        if headers.get("warc-type") != "metadata":
-            continue
-        url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        try:
-            ts = datetime.datetime.strptime(
-                headers.get("warc-date", ""), _WARC_DATE_FMT
-            )
-        except ValueError:
-            continue
-        try:
-            env = _json.loads(body.decode("utf-8"))["Envelope"]
-            pm = env["Payload-Metadata"]
-            hrm = pm.get("HTTP-Response-Metadata", {})
-        except (ValueError, KeyError, TypeError):
-            continue
-        yield {
-            "url": url,
-            "warc_ts": ts,
-            "target_type": env.get("WARC-Header-Metadata", {}).get(
-                "WARC-Type"
-            ),
-            "payload_len": pm.get("Actual-Content-Length"),
-            "http_status": hrm.get("Response-Message", {}).get("Status"),
-            "content_type": hrm.get("Headers", {}).get("Content-Type"),
-        }
+    ct = "application/json"
+    return _record(_page_fields("metadata", url, date, ct, "wat"), body)
 
 
 def build_warcinfo(filename: str) -> bytes:
     """A ``warcinfo`` leading record (real archives carry one; the reader
     must skip it)."""
-    body = (
-        f"software: pdf_extractor_spark{CRLF.decode()}"
-        f"format: WARC File Format 1.0{CRLF.decode()}"
-    ).encode("ascii")
-    headers = [
-        b"WARC/1.0",
-        b"WARC-Type: warcinfo",
-        b"WARC-Filename: " + filename.encode("ascii"),
-        b"Content-Type: application/warc-fields",
-        b"Content-Length: " + str(len(body)).encode("ascii"),
+    fields = [
+        ("WARC-Type", "warcinfo"),
+        ("WARC-Filename", filename),
+        ("Content-Type", "application/warc-fields"),
     ]
-    return CRLF.join(headers) + CRLF + CRLF + body + CRLF + CRLF
+    body = b"software: pdf_extractor_spark\r\nformat: WARC File Format 1.0\r\n"
+    return _record(fields, body)
 
 
 def _gzip_member(raw: bytes) -> bytes:
@@ -274,16 +183,31 @@ def build_warc(
     warcinfo_filename: str | None = None,
 ) -> bytes:
     """Serialize (url, date, payload, content_type) tuples to a .warc /
-    .warc.gz byte string (one gzip member per record, Common Crawl
-    style)."""
-    raws: list[bytes] = []
-    if warcinfo_filename is not None:
-        raws.append(build_warcinfo(warcinfo_filename))
-    for url, date, payload, content_type in records:
-        raws.append(build_warc_response(url, date, payload, content_type))
-    if not gzip_members:
-        return b"".join(raws)
-    return b"".join(_gzip_member(r) for r in raws)
+    .warc.gz byte string."""
+    raws = (build_warc_response(u, d, p, ct) for u, d, p, ct in records)
+    return _archive(raws, gzip_members, warcinfo_filename)
+
+
+def build_wet(
+    records: Iterable[tuple[str, datetime.datetime, bytes]],
+    gzip_members: bool = True,
+    warcinfo_filename: str | None = None,
+) -> bytes:
+    """Serialize (url, date, text_bytes) tuples to a .warc.wet /
+    .warc.wet.gz byte string."""
+    raws = (build_wet_conversion(u, d, t) for u, d, t in records)
+    return _archive(raws, gzip_members, warcinfo_filename)
+
+
+def build_wat(
+    records: Iterable[tuple[str, datetime.datetime, int]],
+    gzip_members: bool = True,
+    warcinfo_filename: str | None = None,
+) -> bytes:
+    """Serialize (url, date, payload_len) tuples to a .warc.wat /
+    .warc.wat.gz byte string."""
+    raws = (build_wat_metadata(u, d, n) for u, d, n in records)
+    return _archive(raws, gzip_members, warcinfo_filename)
 
 
 # --- parser (pure functions) --------------------------------------------------
@@ -309,6 +233,19 @@ def _iter_gzip_members(data: bytes) -> Iterator[bytes]:
         pos += consumed
 
 
+def _header_fields(lines: list[bytes]) -> dict[str, str]:
+    """``name: value`` lines -> {lowercased name: value}, ascii-decoded and
+    stripped; a line without a colon is skipped."""
+    out: dict[str, str] = {}
+    for line in lines:
+        k, sep, v = line.partition(b":")
+        if sep:
+            out[k.strip().decode("ascii", "ignore").lower()] = v.strip().decode(
+                "ascii", "ignore"
+            )
+    return out
+
+
 def _parse_record(raw: bytes, pos: int) -> tuple[dict[str, str], bytes, int] | None:
     """Parse one record at ``pos``; returns (headers, body, next_pos) or
     None when no complete, well-formed record starts there."""
@@ -319,16 +256,7 @@ def _parse_record(raw: bytes, pos: int) -> tuple[dict[str, str], bytes, int] | N
         head_end = raw.find(CRLF + CRLF, start)
         if head_end < 0:
             return None
-        headers: dict[str, str] = {}
-        lines = raw[start:head_end].split(CRLF)
-        if not lines or not lines[0].startswith(b"WARC/"):
-            return None
-        for line in lines[1:]:
-            k, sep, v = line.partition(b":")
-            if sep:
-                headers[
-                    k.strip().decode("ascii", "ignore").lower()
-                ] = v.strip().decode("ascii", "ignore")
+        headers = _header_fields(raw[start:head_end].split(CRLF)[1:])
         try:
             length = int(headers.get("content-length", ""))
         except ValueError:
@@ -372,53 +300,112 @@ def split_http_response(body: bytes) -> tuple[str, dict[str, str], bytes]:
         return "", {}, body
     lines = body[:sep].split(CRLF)
     status = lines[0].decode("ascii", "ignore")
-    headers: dict[str, str] = {}
-    for line in lines[1:]:
-        k, s, v = line.partition(b":")
-        if s:
-            headers[k.strip().decode("ascii", "ignore").lower()] = v.strip().decode(
-                "ascii", "ignore"
-            )
-    return status, headers, body[sep + 4 :]
+    return status, _header_fields(lines[1:]), body[sep + 4 :]
 
 
-def warc_rows(data: bytes) -> Iterator[dict]:
-    """North-rule input rows from archive bytes: ``response`` records only,
-    HTTP framing stripped, WARC-Date parsed naive-UTC (Spark timestamps
-    are tz-naive here)."""
+def _page_records(
+    data: bytes, warc_type: str
+) -> Iterator[tuple[str, datetime.datetime, bytes]]:
+    """(url, warc_ts, body) of every ``warc_type`` record with a target URI
+    and a parseable WARC-Date, read naive-UTC (Spark timestamps are
+    tz-naive here); every other record is skipped."""
     for headers, body in iter_warc_records(data):
-        if headers.get("warc-type") != "response":
+        if headers.get("warc-type") != warc_type:
             continue
         url = headers.get("warc-target-uri")
         if not url:
             continue
         wdate = headers.get("warc-date", "")
-        try:
-            ts = datetime.datetime.strptime(wdate, _WARC_DATE_FMT)
-        except ValueError:
+        for fmt in _WARC_DATE_FMTS:
             try:
-                # WARC 1.1 allows fractional seconds
-                ts = datetime.datetime.strptime(
-                    wdate, "%Y-%m-%dT%H:%M:%S.%fZ"
-                )
+                ts = datetime.datetime.strptime(wdate, fmt)
+                break
             except ValueError:
-                continue
-        _status, _http, payload = split_http_response(body)
+                pass
+        else:
+            continue
+        yield url, ts, body
+
+
+def warc_rows(data: bytes) -> Iterator[dict]:
+    """North-rule input rows from archive bytes: ``response`` records only,
+    HTTP framing stripped."""
+    for url, ts, body in _page_records(data, "response"):
+        payload = split_http_response(body)[2]
+        yield {"url": url, "warc_ts": ts, "html": payload, "text": "", "lang": None}
+
+
+def wet_rows(data: bytes) -> Iterator[dict]:
+    """(url, warc_ts, text) rows from WET archive bytes: ``conversion``
+    records only, body decoded utf-8 (replace — a conversion record is
+    text by contract, but one mojibake record must not kill the task)."""
+    for url, ts, body in _page_records(data, "conversion"):
+        yield {"url": url, "warc_ts": ts, "text": body.decode("utf-8", "replace")}
+
+
+def wat_rows(data: bytes) -> Iterator[dict]:
+    """(url, warc_ts, payload_len, http_status, content_type) rows from WAT
+    archive bytes: ``metadata`` records only, body parsed as JSON with the
+    Envelope layout above. Malformed JSON bodies are skipped, never fatal
+    (same tolerance contract as the WARC/WET parsers)."""
+    for url, ts, body in _page_records(data, "metadata"):
+        try:
+            env = json.loads(body.decode("utf-8"))["Envelope"]
+            pm = env["Payload-Metadata"]
+            hrm = pm.get("HTTP-Response-Metadata", {})
+        except (ValueError, KeyError, TypeError):
+            continue
         yield {
             "url": url,
             "warc_ts": ts,
-            "html": payload,
-            "text": "",
-            "lang": None,
+            "target_type": env.get("WARC-Header-Metadata", {}).get(
+                "WARC-Type"
+            ),
+            "payload_len": pm.get("Actual-Content-Length"),
+            "http_status": hrm.get("Response-Message", {}).get("Status"),
+            "content_type": hrm.get("Headers", {}).get("Content-Type"),
         }
 
 
-# --- Spark reader --------------------------------------------------------------
+# --- Spark readers -------------------------------------------------------------
 
-_ROW_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
 _BATCH_ROWS = 256
+
+
+def _read_archives(
+    spark: SparkSession, path: str, glob: str, n_partitions: int | None,
+    rows: Callable[[bytes], Iterator[dict]], schema: str,
+) -> DataFrame:
+    """``binaryFile`` scan of the archives under ``path`` matching ``glob``
+    (one task per archive) -> ``mapInPandas`` running the pure-function
+    ``rows`` parser on each file, emitting ``schema`` rows in batches of at
+    most ``_BATCH_ROWS``. ``n_partitions`` repartitions the file list BEFORE
+    parsing, for archives-per-task balance when file counts are small."""
+    import pandas as pd
+
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .load(path)
+        .select("content")
+    )
+    if n_partitions:
+        files = files.repartition(n_partitions)
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        buf: list[dict] = []
+        for pdf in batches:
+            for content in pdf["content"]:
+                for row in rows(bytes(content)):
+                    buf.append(row)
+                    if len(buf) >= _BATCH_ROWS:
+                        yield pd.DataFrame(buf, columns=cols)
+                        buf = []
+        if buf:
+            yield pd.DataFrame(buf, columns=cols)
+
+    return files.mapInPandas(gen, schema=schema)
 
 
 def read_warc(
@@ -429,37 +416,12 @@ def read_warc(
 ) -> DataFrame:
     """Directory of .warc / .warc.gz files -> north-rule input rows.
 
-    ``binaryFile`` scan (one task per archive; ~1 GB Common Crawl files
-    give a 100 TB crawl ~100k natural splits) -> ``mapInPandas`` running
-    the pure-function record parser, emitting bounded row batches.
-    ``n_partitions`` repartitions the file list BEFORE parsing, for
-    archives-per-task balance when file counts are small.
-    """
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
+    One task per archive (~1 GB Common Crawl files give a 100 TB crawl
+    ~100k natural splits), parsed by ``warc_rows``."""
+    return _read_archives(
+        spark, path, glob, n_partitions, warc_rows,
+        "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    if n_partitions:
-        files = files.repartition(n_partitions)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = ["url", "warc_ts", "html", "text", "lang"]
-        buf: list[dict] = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for row in warc_rows(bytes(content)):
-                    buf.append(row)
-                    if len(buf) >= _BATCH_ROWS:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        if buf:
-            yield pd.DataFrame(buf, columns=cols)
-
-    return files.mapInPandas(gen, schema=_ROW_SCHEMA)
 
 
 def read_wet(
@@ -469,36 +431,12 @@ def read_wet(
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Directory of .warc.wet / .warc.wet.gz files -> (url, warc_ts, text)
-    rows. Same scale posture as ``read_warc`` (one task per ~1 GB archive,
-    member-by-member decompression, bounded row batches) — WET is the
-    already-extracted side of a crawl, so rows go straight to curation
-    operators with no extraction pass."""
-    import pandas as pd
-
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("content")
-    )
-    if n_partitions:
-        files = files.repartition(n_partitions)
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        cols = ["url", "warc_ts", "text"]
-        buf: list[dict] = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for row in wet_rows(bytes(content)):
-                    buf.append(row)
-                    if len(buf) >= _BATCH_ROWS:
-                        yield pd.DataFrame(buf, columns=cols)
-                        buf = []
-        if buf:
-            yield pd.DataFrame(buf, columns=cols)
-
-    return files.mapInPandas(
-        gen, schema="url string, warc_ts timestamp, text string"
+    rows. Same reader as ``read_warc`` — WET is the already-extracted side
+    of a crawl, so rows go straight to curation operators with no
+    extraction pass."""
+    return _read_archives(
+        spark, path, glob, n_partitions, wet_rows,
+        "url string, warc_ts timestamp, text string",
     )
 
 

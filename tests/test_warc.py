@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import datetime
+import hashlib
+
+import pytest
 
 from pdf_extractor_spark.sources import warc as W
 
@@ -291,3 +294,96 @@ def test_wat_rows_skips_non_metadata_and_bad_json():
     )
     rows = list(W.wat_rows(mixed))
     assert len(rows) == 1 and rows[0]["url"] == url
+
+
+# --- byte pins and the shared record filter -------------------------------------
+
+
+def _pin_recs():
+    """Six pages, every third a PDF whose payload holds CRLFs and raw bytes,
+    each HTML page carrying a CRLFCRLF + ``WARC/1.0`` inside its body."""
+    base = datetime.datetime(2024, 3, 1, 12, 0, 0)
+    out = []
+    for i in range(6):
+        if i % 3 == 2:
+            payload = b"%PDF-1.4\r\n\r\n" + bytes(range(i * 40, i * 40 + 40))
+            ct = "application/pdf"
+        else:
+            payload = f"<html><body>pinned page {i}\r\n\r\nWARC/1.0</body></html>"
+            payload, ct = payload.encode(), "text/html"
+        out.append(
+            (f"https://pin{i}.example/p/{i}?q={i}",
+             base + datetime.timedelta(seconds=37 * i), payload, ct)
+        )
+    return out
+
+
+# md5 of each archive, keyed by gzip_members (each archive leads with a
+# warcinfo record). Any byte change in framing, ids, field order or member
+# compression moves these.
+_ARCHIVE_MD5 = {
+    False: {
+        "warc": "8288fac2c37f7f53f50e7402bdded5b4",
+        "wet": "b34b9d93995e198d6ec0c2f6125d6563",
+        "wat": "ca2d210c8289d977a8a2ea86d95f0cd2",
+    },
+    True: {
+        "warc": "12f5993906d115a78e230531d069bbf2",
+        "wet": "384459988fde24964968a36ea0f31f63",
+        "wat": "a80d332c7779e9053b30854661759beb",
+    },
+}
+
+
+@pytest.mark.parametrize("gz", [False, True])
+def test_archive_bytes_pinned(gz):
+    recs = _pin_recs()
+    got = {
+        "warc": W.build_warc(recs, gzip_members=gz, warcinfo_filename="pin.warc"),
+        "wet": W.build_wet(
+            [(u, d, p) for u, d, p, _ in recs],
+            gzip_members=gz, warcinfo_filename="pin.wet",
+        ),
+        "wat": W.build_wat(
+            [(u, d, len(p)) for u, d, p, _ in recs],
+            gzip_members=gz, warcinfo_filename="pin.wat",
+        ),
+    }
+    assert {k: hashlib.md5(v).hexdigest() for k, v in got.items()} == (
+        _ARCHIVE_MD5[gz]
+    )
+
+
+def test_warcinfo_bytes_pinned():
+    assert hashlib.md5(W.build_warcinfo("pin.warc.gz")).hexdigest() == (
+        "dcc2a9252ee122dc68abb5020ba0243f"
+    )
+
+
+def _fractional(record: bytes) -> bytes:
+    """The same record re-dated to a WARC 1.1 fractional-second date. Only
+    the header changes, so Content-Length still matches the body."""
+    return record.replace(
+        b"WARC-Date: 2024-01-01T00:00:00Z", b"WARC-Date: 2024-01-01T00:00:00.5Z"
+    )
+
+
+@pytest.mark.parametrize(
+    "rows, record",
+    [
+        (W.warc_rows, lambda u, d: W.build_warc_response(u, d, b"<p>x</p>")),
+        (W.wet_rows, lambda u, d: W.build_wet_conversion(u, d, b"x")),
+        (W.wat_rows, lambda u, d: W.build_wat_metadata(u, d, 8)),
+    ],
+    ids=["warc", "wet", "wat"],
+)
+def test_rows_accept_fractional_second_dates(rows, record):
+    """WARC 1.1 allows ``WARC-Date`` with fractional seconds; every row
+    parser must keep such a record, not drop it."""
+    url = "https://frac.example/a"
+    data = _fractional(record(url, datetime.datetime(2024, 1, 1)))
+    assert b"00:00:00.5Z" in data
+    got = list(rows(data))
+    assert len(got) == 1
+    assert got[0]["url"] == url
+    assert got[0]["warc_ts"] == datetime.datetime(2024, 1, 1, 0, 0, 0, 500000)
